@@ -182,9 +182,11 @@ def write_document_table(
     The reference hands (key, OJAI document) pairs to a Hadoop
     OutputFormat (MapRDBJSONSink.java:67-110); the Spark-native
     equivalent is a driver-coordinated DataSource commit — strictly
-    stronger task-commit semantics. Documents are written sorted within
-    partitions by ``_id`` so point lookups can skip row groups on the
-    ``_id`` min/max statistics.
+    stronger task-commit semantics. Hash-partitioning on ``_id`` keeps all
+    documents of a key in one file, sorted by ``_id``. The sort lets a
+    scan skip row groups only for a filter that reaches it as an ``_id``
+    predicate: a STRING key's lookup does; other key types filter on a
+    cast of ``_id``, which is not pushed down.
     """
     encoded = encode_documents(df, key_field, strict=strict)
     (
@@ -203,15 +205,34 @@ def read_document_table(
     of the A5 encode (the reference's read side lives in MapR-DB itself;
     here the table is self-contained).
 
-    ``schema`` is the declared DDL of the original record (the engine's
-    explicit-schema contract — no inference over the JSON docs). Fields
-    skipped at write time (the skip-null rule) come back as NULL, so
-    ``read(write(df)) == df`` for key-complete rows. The decode is one
-    ``from_json`` projection — codegen'd, zero shuffle, mirroring the
-    encode path.
+    ``schema`` is the declared DDL of the original record (no inference
+    over the JSON docs); a key field missing from it, or of a non-key
+    type, raises ValueError. Fields skipped at write time (the skip-null
+    rule) come back as NULL, so ``read(write(df)) == df`` for key-complete
+    rows.
+
+    The key is ``try_cast(_id AS <key type>)``: ``_id`` is its string
+    rendering at encode time, and every ``_KEY_TYPES`` value (NaN,
+    ±Infinity, -0.0, integer extremes, unicode) reads back as itself. A
+    key filter thus needs only ``_id``, and Catalyst runs it below the
+    ``from_json`` of the other fields, so a point lookup decodes only the
+    matching documents. The raw ``(_id, doc)`` schema is given, not
+    inferred from file footers; a directory without data files reads as
+    empty. The one divergence from decoding the key out of ``doc``: a key
+    read as another type than it was written with is the cast of its
+    string form, where ``from_json`` gave NULL (STRING ``'42'`` read as
+    INT is 42; INT ``1`` read as BOOLEAN is true).
     """
-    raw = spark.read.format(fmt).load(path)
-    rec = raw.select(F.from_json(F.col("doc"), schema).alias("r"), F.col("_id"))
-    # the key column inside the doc is authoritative; _id is its string
-    # rendering (kept for provenance checks, dropped from the record)
-    return rec.select("r.*")
+    st = parse_declared_schema(schema, key_field, strict=False)
+    rest = T.StructType([f for f in st.fields if f.name != key_field])
+    raw = spark.read.format(fmt).schema("_id STRING, doc STRING").load(path)
+    rec = raw.select(
+        F.col("_id").try_cast(st[key_field].dataType).alias("_id"),
+        F.from_json(F.col("doc"), rest).alias("r"),
+    )
+    return rec.select(
+        *[
+            (F.col("_id") if f.name == key_field else F.col("r").getField(f.name)).alias(f.name)
+            for f in st.fields
+        ]
+    )

@@ -112,9 +112,14 @@ class MapRStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: MapRStreamPartition):
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        t = pq.read_table(partition.path)
+        # one open handle: reading by path stats the file and opens it
+        # again, so a topic file replaced by rename in between is read
+        # torn; the handle pins one version
+        with pa.OSFile(partition.path) as fh:
+            t = pq.read_table(fh)
         idx = range(partition.part_idx, t.num_rows, partition.n_parts)
         take = list(idx)[partition.start : partition.end]
         sub = t.take(take)

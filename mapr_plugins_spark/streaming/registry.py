@@ -782,11 +782,12 @@ def s17_stream_heavy_hitters_bounded(spark: SparkSession, sf_dir: str) -> DataFr
     )
     # the token TOTAL needs no explode at all — each doc contributes
     # exactly size(tokens) rows, so Σ size is the count (guide §2.3:
-    # row-local size arithmetic instead of a second corpus-wide explode)
+    # row-local size arithmetic instead of a second corpus-wide explode;
+    # coalesced because SUM over an empty corpus is NULL, not 0)
     docs_tok = _t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs_tok.select(F.explode(tokens_col("text")).alias("item"))
     tot = docs_tok.agg(
-        F.sum(F.greatest(F.size(tokens_col("text")), F.lit(0))).alias("n")
+        F.coalesce(F.sum(F.greatest(F.size(tokens_col("text")), F.lit(0))), F.lit(0)).alias("n")
     )
     return (
         toks.join(F.broadcast(cands), "item")
@@ -1499,9 +1500,11 @@ def s26_stream_bigram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(F.size(_tc("text")) - 1, F.lit(0)).alias("__nb"),
         )
         .groupBy()
-        .agg(
-            F.sum(F.when(F.col("late") == 0, F.col("__nb")).otherwise(0)).alias("n_e"),
-            F.sum(F.when(F.col("late") == 1, F.col("__nb")).otherwise(0)).alias("n_l"),
+        .agg(  # coalesce: SUM over an empty corpus is NULL, the count is 0
+            F.coalesce(F.sum(F.when(F.col("late") == 0, F.col("__nb")).otherwise(0)), F.lit(0))
+            .alias("n_e"),
+            F.coalesce(F.sum(F.when(F.col("late") == 1, F.col("__nb")).otherwise(0)), F.lit(0))
+            .alias("n_l"),
         )
     )
     counted = (

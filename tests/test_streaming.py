@@ -173,6 +173,64 @@ def test_pyds_chunked_replay_and_latest_offsets(spark):
     assert spark.table(name2).count() == 0
 
 
+def test_pyds_read_survives_topic_replaced_by_rename(tmp_path):
+    """A topic file replaced by rename after ``partitions()`` is read as
+    whole rows of one version, never torn (reading by path stats the file
+    and opens it again; pyarrow then fails with a corrupt-page OSError)."""
+    import json
+    import os
+    import shutil
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapr_plugins_spark.sources.pyds import MapRStreamReader
+
+    def version(ver, n):
+        path = str(tmp_path / f"v{ver}.parquet")
+        ts = pa.array([i * 1000 for i in range(n)], pa.timestamp("us"))
+        table = pa.table({"event_id": list(range(n)), "ver": [ver] * n, "ts": ts})
+        pq.write_table(table, path, row_group_size=500)
+        return path
+
+    v0, v1 = version(0, 1000), version(1, 4000)
+    topic = str(tmp_path / "topic.parquet")
+
+    def publish(src, tag):
+        shutil.copy(src, f"{topic}.{tag}")
+        os.replace(f"{topic}.{tag}", topic)
+
+    publish(v0, "first")
+    reader = MapRStreamReader({"path": topic, "numPartitions": "2"})
+    parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+    publish(v1, "second")
+    rows = [json.loads(r[1]) for p in parts for r in reader.read(p)]
+    assert {r["ver"] for r in rows} == {1}
+    assert sorted(r["event_id"] for r in rows) == list(range(1000))
+
+    # replaced over and over while reads run: each read is one version
+    stop = threading.Event()
+
+    def flip():
+        i = 0
+        while not stop.is_set():
+            publish((v0, v1)[i % 2], str(i % 2))
+            i += 1
+
+    flipper = threading.Thread(target=flip)
+    flipper.start()
+    try:
+        for _ in range(100):
+            for p in parts:
+                rows = [json.loads(r[1]) for r in reader.read(p)]
+                assert len(rows) == 500 and len({r["ver"] for r in rows}) == 1
+    finally:
+        stop.set()
+        flipper.join(timeout=30)
+    assert not flipper.is_alive()
+
+
 def test_pyds_checkpoint_restart_exactly_once(spark, tmp_path):
     """Offsets live in the checkpoint WAL: a query stopped mid-stream
     and restarted from the same checkpoint delivers every record
