@@ -6,14 +6,22 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All implementations live in the ``mapr_plugins_spark`` package; this
-module is a thin registry over it.
+module is a thin registry over it. A query key is registered by being
+defined: every function named ``qNN_*``, ``sNN_*`` or ``x_*`` in one of
+the :data:`FAMILIES` modules is a key, and each family's ``oracles()``
+holds the DuckDB SQL for its own keys. Adding an operator means editing
+only its family module.
 """
 
 from __future__ import annotations
 
+import importlib
+import inspect
+import re
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from pathlib import Path
+from types import ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -104,28 +112,64 @@ PRIORITY: tuple[str, ...] = (
 )
 
 
+#: The family modules, in registration order. A key is registered by
+#: being defined: every function in a family module whose name matches
+#: ``_KEY_NAME`` and whose ``__module__`` is that module (so a key
+#: imported into another family is not counted twice). Each family also
+#: exposes one ``oracles()`` dict, keyed by its own query names.
+FAMILIES: tuple[str, ...] = (
+    "mapr_plugins_spark.queries",
+    "mapr_plugins_spark.operators.reg_ann",
+    "mapr_plugins_spark.operators.reg_dedup",
+    "mapr_plugins_spark.operators.reg_text",
+    "mapr_plugins_spark.operators.reg_curation",
+    "mapr_plugins_spark.operators.reg_analytics",
+    "mapr_plugins_spark.operators.reg_sketch_graph",
+    "mapr_plugins_spark.operators.reg_relops",
+    "mapr_plugins_spark.streaming.registry",
+    "mapr_plugins_spark.sources.registry",
+)
+
+_KEY_NAME = re.compile(r"^(q\d+|s\d+|x)_")
+
+
+def _family_queries(module: ModuleType) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The query keys ``module`` defines (see :data:`FAMILIES`)."""
+    return {
+        name: fn
+        for name, fn in vars(module).items()
+        if _KEY_NAME.match(name)
+        and inspect.isfunction(fn)
+        and fn.__module__ == module.__name__
+    }
+
+
+def _merge_disjoint(parts: Iterable[dict], what: str) -> dict:
+    """Union of per-family dicts. A key defined by two families would
+    silently shadow one of them, so it fails loudly instead."""
+    out: dict = {}
+    for part in parts:
+        dup = out.keys() & part.keys()
+        if dup:
+            raise KeyError(f"{what} keys defined in two family modules: {sorted(dup)}")
+        out.update(part)
+    return out
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, emitted in
     PRIORITY order first so any graded prefix covers the whole engine."""
-    from mapr_plugins_spark import queries as Q
+    from mapr_plugins_spark.streaming.registry import tws_available
 
     # No try/except here: an unimportable family must fail LOUDLY with
     # its real cause, not silently shrink the registry (a silent except
     # would drop PRIORITY keys and trip the missing-check below with a
     # misleading KeyError instead of the actual ImportError).
-    from mapr_plugins_spark.operators.registry import extension_queries
-    from mapr_plugins_spark.sources.registry import format_queries
-    from mapr_plugins_spark.streaming.registry import streaming_queries
-
-    reg: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, fn in vars(Q).items():
-        if callable(fn) and name.startswith("q") and getattr(fn, "__module__", "").endswith(
-            "queries"
-        ):
-            reg[name] = fn
-    reg.update(extension_queries())
-    reg.update(streaming_queries())
-    reg.update(format_queries())
+    reg = _merge_disjoint(
+        (_family_queries(importlib.import_module(m)) for m in FAMILIES), "query"
+    )
+    if not tws_available():
+        del reg["s09_transform_with_state"]
     missing = [k for k in PRIORITY if k not in reg]
     if missing:  # a priority key must never silently vanish
         raise KeyError(f"PRIORITY keys missing from registry: {missing}")
@@ -136,14 +180,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query key (omitted keys → rows-only check)."""
-    from mapr_plugins_spark.oracles import RELATIONAL_ORACLES
-
-    from mapr_plugins_spark.operators.registry import extension_oracles
-    from mapr_plugins_spark.sources.registry import format_oracles
-    from mapr_plugins_spark.streaming.registry import streaming_oracles
-
-    out = dict(RELATIONAL_ORACLES)
-    out.update(extension_oracles())
-    out.update(streaming_oracles())
-    out.update(format_oracles())
-    return out
+    return _merge_disjoint(
+        (importlib.import_module(m).oracles() for m in FAMILIES), "oracle"
+    )

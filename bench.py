@@ -333,7 +333,7 @@ def main() -> None:
     chunks: list[dict[str, float]] = [{}]
     cur_len = 0
     for k, v in items:
-        entry_len = len(k) + 12
+        entry_len = len(json.dumps({k: v}))  # the entry plus its ", " separator
         if chunks[-1] and cur_len + entry_len > 800:
             chunks.append({})
             cur_len = 0

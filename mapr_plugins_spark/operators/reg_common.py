@@ -1,8 +1,7 @@
 """Shared fragments for the per-family extension registries: the dedup corpus, tokenization SQL, portable constants, and cross-family oracle helpers.
 
-Mechanically split out of operators/registry.py (round 13) — same
-queries, same oracles; the registry module remains the façade that
-aggregates every family.
+Not a query family: it defines no keys; the family modules import
+from it.
 """
 
 from __future__ import annotations

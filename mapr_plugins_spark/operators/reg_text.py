@@ -1,8 +1,8 @@
 """Text-analysis extension queries + DuckDB oracles.
 
-Mechanically split out of operators/registry.py (round 13) — same
-queries, same oracles; the registry module remains the façade that
-aggregates every family.
+A query family (see ``__spark_entry__.FAMILIES``): every ``q*``/``x_*``
+function defined here is a registered key, and ``oracles()`` holds the
+DuckDB SQL for those keys.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Mergeable frequency sketches: count-min + a bloom-filter key set.
 
-Companions to the HLL distinct sketches (registry.py::x_sketch_hll) on
+Companions to the HLL distinct sketches (reg_sketch_graph.py::x_sketch_hll) on
 the approximate-analytics surface the reference's host engines provide.
 Both are built from the engine-portable seeded hash
 (functions/portable_hash.py), so the *entire* sketch — cell counts and

@@ -7,7 +7,8 @@ the hot path is whole-stage codegen with zero Python and zero shuffle;
 only the term-frequency query aggregates.
 
 Every operator has an exactly-equivalent DuckDB oracle (same token
-definition, same arithmetic) in ``operators/registry.py``.
+definition, same arithmetic) in its query family's ``oracles()``
+(``operators/reg_*.py``).
 """
 
 from __future__ import annotations

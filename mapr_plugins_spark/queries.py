@@ -1285,3 +1285,10 @@ def q25_doc_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
     return encode_documents(cust, key_field="c_custkey")
+
+
+def oracles() -> dict[str, str]:
+    """The relational family's DuckDB oracles, one per query above."""
+    from mapr_plugins_spark.oracles import RELATIONAL_ORACLES
+
+    return RELATIONAL_ORACLES

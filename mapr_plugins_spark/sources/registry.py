@@ -9,8 +9,6 @@ SQL, so the parse semantics are cross-checked end to end.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -271,22 +269,6 @@ def q73_fixedwidth_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def format_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        fn.__name__: fn
-        for fn in (
-            q26_clf_parse,
-            q27_syslog_parse,
-            q28_grok_parse,
-            q29_csv_parse,
-            q71_warc_parse,
-            q72_jsonl_parse,
-            q73_fixedwidth_parse,
-            q74_csv_corrupt,
-        )
-    }
-
-
 # ---------------------------------------------------------------------------
 # oracles — identical construction + extraction in DuckDB SQL
 
@@ -318,7 +300,7 @@ _GROK_LINE = (
 )
 
 
-def format_oracles() -> dict[str, str]:
+def oracles() -> dict[str, str]:
     clf = _duck_re(CLF_REGEX)
     slog = _duck_re(SYSLOG_REGEX)
     grok_re = _duck_re(grok_compile(_GROK_LOG)[0])

@@ -11,8 +11,6 @@ timestamp formatting/timezone can leak into the hash.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -340,7 +338,7 @@ def s10_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run_available_now's sizing, and the LWW merge's full-outer join
     # otherwise shuffles KB-sized state into the session's full
     # partition count per micro-batch.
-    with pinned_state_partitions(spark):
+    with pinned_state_partitions(stream):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", f"{run}/ckpt")
@@ -447,7 +445,7 @@ def s13_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from mapr_plugins_spark.operators.dedup import minhash_band_signatures
-    from mapr_plugins_spark.operators.registry import _BAND_ROWS, _MINHASH_SEEDS
+    from mapr_plugins_spark.operators.reg_common import _BAND_ROWS, _MINHASH_SEEDS
     from mapr_plugins_spark.streaming.replay import (
         df_stream_chunked,
         pinned_state_partitions,
@@ -491,10 +489,9 @@ def s13_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the session's full shuffle-partition count (32+ state files
     # written and re-read per micro-batch for KB-sized state) — the
     # foreachBatch keys were the streaming keys the §2.2
-    # source-derived sizing missed, and their noted source bytes
-    # leaked into the next streaming run's queue. Same pin, same
-    # restore contract as run_available_now.
-    with pinned_state_partitions(spark):
+    # source-derived sizing missed. Same pin, same restore contract
+    # as run_available_now.
+    with pinned_state_partitions(stream):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", f"{run}/ckpt")
@@ -986,7 +983,7 @@ def s20_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run_available_now's sizing, and the group-bounded state merge
     # otherwise shuffles into the session's full partition count per
     # micro-batch.
-    with pinned_state_partitions(spark):
+    with pinned_state_partitions(stream):
         q = (
             stream.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", f"{run}/ckpt")
@@ -1098,12 +1095,25 @@ def s22_stream_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — floor(value · 1e6) on an IEEE double is the identical integer
     # math.floor(float(v) * 1000000.0) produced per row in Python
     # (same double multiply, same floor). The fold's state and output
-    # are unchanged.
+    # are unchanged. A NULL or non-finite value fails here, by name:
+    # past the Python boundary a NULL would turn the exact-integer
+    # column into float64, and floor() would clamp ±inf and zero NaN.
+    value = F.col("value")
     stream = stream.select(
         "user_id",
         "ts",
         "event_id",
-        F.floor(F.col("value") * 1000000.0).cast("long").alias("x_micro"),
+        F.when(
+            value.isNull() | F.isnan(value) | (F.abs(value) == float("inf")),
+            F.raise_error(
+                F.concat(
+                    F.lit("s22_stream_zscore: events.value is NULL or not finite at event_id "),
+                    F.col("event_id").cast("string"),
+                )
+            ),
+        )
+        .otherwise(F.floor(value * 1000000.0).cast("long"))
+        .alias("x_micro"),
     )
 
     def fold(key, pdfs, state):
@@ -1223,7 +1233,7 @@ def s23_stream_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     # entity-keyed (one state row per user), row-paced fold — same
-    # declaration as s22 (replay.py: _ROW_FOLD_PARTITION_BYTES_CONF)
+    # declaration as s22 (replay.py: ROW_FOLD_PARTITION_BYTES)
     emitted = run_available_now(pairs, "append", row_paced_fold=True)
     counts = emitted.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n_pair")
@@ -1528,59 +1538,23 @@ def s26_stream_bigram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    fns = [
-        s01_tumbling_window,
-        s02_sliding_window,
-        s03_session_window,
-        s04_stateful_dedup,
-        s05_stream_static_join,
-        s06_stream_stream_join,
-        s07_dedup_within_watermark,
-        s08_stateful_running_max,
-        s10_cdc_merge_upsert,
-        s11_pyds_kafka_source,
-        s12_stream_ewma,
-        s13_stream_dedup_admission,
-        s14_stream_heavy_hitters,
-        s15_stream_drift,
-        s16_stream_token_budget,
-        s17_stream_heavy_hitters_bounded,
-        s18_stream_cms,
-        s19_stream_quantile,
-        s20_stream_rollup,
-        s21_stream_holt,
-        s22_stream_zscore,
-        s23_stream_markov,
-        s24_stream_psi,
-        s25_stream_semantic_admission,
-        s26_stream_bigram_drift,
-    ]
-    if tws_available():
-        fns.append(s09_transform_with_state)
-    return {fn.__name__: fn for fn in fns}
-
-
-def streaming_oracles() -> dict[str, str]:
-    from mapr_plugins_spark.operators.registry import (
+def oracles() -> dict[str, str]:
+    from mapr_plugins_spark.operators.reg_analytics import (
+        DRIFT_CHI2_ORACLE_SQL,
+        HOLT_TREND_ORACLE_SQL,
+        MARKOV_ORACLE_SQL,
+        ZSCORE_ORACLE_SQL,
+        _psi_oracle,
+    )
+    from mapr_plugins_spark.operators.reg_common import (
         _CORPUS_SQL,
         _TOKS_SQL,
         _int_d2_sql,
         _minhash_pairs_ctes,
     )
-
-    from mapr_plugins_spark.operators.registry import (
-        DRIFT_CHI2_ORACLE_SQL,
-        TOKEN_BUDGET_ORACLE_SQL,
-        HOLT_TREND_ORACLE_SQL,
-        ZSCORE_ORACLE_SQL,
-        MARKOV_ORACLE_SQL,
-        _psi_oracle,
-    )
-
-    from mapr_plugins_spark.operators.registry import _cms_oracle
-
-    from mapr_plugins_spark.operators.registry import ROLLUP_ORACLE_SQL
+    from mapr_plugins_spark.operators.reg_curation import TOKEN_BUDGET_ORACLE_SQL
+    from mapr_plugins_spark.operators.reg_relops import ROLLUP_ORACLE_SQL
+    from mapr_plugins_spark.operators.reg_sketch_graph import _cms_oracle
 
     oracles = {
         # every state component folds commutatively, so the streaming

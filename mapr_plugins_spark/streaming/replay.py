@@ -14,30 +14,18 @@ streaming queries can participate in the oracle-differential gate.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
+import shutil
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapr_plugins_spark.session import pin_runtime_conf
-
-#: Staged source sizes (bytes) recorded by the stream constructors
-#: since the last ``run_available_now`` — the input-size signal the
-#: state-partition derivation below consumes. Module-level because the
-#: registry functions build their stream and run it within one call;
-#: ``pinned_state_partitions`` (used by ``run_available_now`` AND the
-#: foreachBatch-shaped keys) drains the list. CONTRACT (round-13
-#: ADVICE): build a stream, then run it, one query at a time — every
-#: runner drains the notes of the stream(s) it is about to execute
-#: (several notes per run are fine: a stream-stream join records both
-#: sides; the derivation takes the max). A stream built and then
-#: abandoned without a run would leak its note into the next run's
-#: derivation — perf-only (results are partitioning-independent), and
-#: no in-repo path does it since round 14 wired the foreachBatch keys.
-_PENDING_SOURCE_BYTES: list[int] = []
 
 #: Advisory bytes of staged (compressed parquet) replay input per
 #: streaming state partition — the streaming twin of AQE's
@@ -48,16 +36,14 @@ _PENDING_SOURCE_BYTES: list[int] = []
 #: ~75 ms each) per session shuffle partition PER MICRO-BATCH
 #: regardless of data volume. Derivation: partitions =
 #: clamp(ceil(staged_bytes / advisory), 1, defaultParallelism).
-#: The 512 KiB local default is measured, not guessed (round-13 A/B at
+#: The 512 KiB value is measured, not guessed (round-13 A/B at
 #: sf0.1, 5 stateful keys, best-of-2 each: 32 parts 70.0 s → 8 parts
 #: 28.2 s → 4 parts 21.7 s → 2 parts 32.9 s — fewer instances win
-#: until the Python fold serializes); production deployments with real
-#: state volumes raise it via this conf (uncompressed fold input runs
+#: until the Python fold serializes). Uncompressed fold input runs
 #: ~4-8× the parquet bytes, and Python fold throughput per core is the
 #: binding resource, hence a target well below AQE's 64 MB batch
-#: advisory).
-_STATE_PARTITION_BYTES_CONF = "spark.mapr_plugins.stream.statePartitionBytes"
-_STATE_PARTITION_BYTES_DEFAULT = 512 * 1024
+#: advisory.
+STATE_PARTITION_BYTES = 512 * 1024
 
 #: Denser advisory for ENTITY-KEYED, ROW-PACED GroupState folds (state
 #: key count ∝ entities in the data, Python fold work ∝ rows — e.g.
@@ -70,47 +56,47 @@ _STATE_PARTITION_BYTES_DEFAULT = 512 * 1024
 #: median at 64 KiB, while the bounded-key folds REGRESS there
 #: (s26 6.1→11.2, s18 6.0→7.5, s17 4.1→4.8) — hence a per-operator
 #: declaration, not a family-wide constant. Same clamp to
-#: [1, defaultParallelism]; production raises either conf.
-_ROW_FOLD_PARTITION_BYTES_CONF = "spark.mapr_plugins.stream.rowFoldPartitionBytes"
-_ROW_FOLD_PARTITION_BYTES_DEFAULT = 64 * 1024
+#: [1, defaultParallelism].
+ROW_FOLD_PARTITION_BYTES = 64 * 1024
 
 
-def _note_source_bytes(path: str) -> None:
-    """Record the on-disk size of a staged stream source directory (or
-    single file) for the next ``run_available_now`` call."""
-    total = 0
+def _source_paths(stream: DataFrame) -> list[str]:
+    """The ``path`` option of every file-stream leaf of ``stream``'s
+    analyzed plan (a stream-stream join or a union has several)."""
+    paths, todo = [], [stream._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+        if node.getClass().getSimpleName() == "StreamingRelation":
+            path = node.dataSource().options().get("path")
+            if path.isDefined():
+                paths.append(path.get())
+    return paths
+
+
+def _staged_bytes(path: str) -> int:
+    """On-disk size of a staged stream source directory (symlinked
+    files count at their target's size) or single file."""
     if os.path.isdir(path):
-        for entry in os.scandir(path):
-            if entry.is_file(follow_symlinks=True):
-                total += os.stat(entry.path).st_size
-    elif os.path.exists(path):
-        total = os.path.getsize(path)
-    _PENDING_SOURCE_BYTES.append(total)
+        return sum(
+            os.stat(e.path).st_size for e in os.scandir(path) if e.is_file(follow_symlinks=True)
+        )
+    return os.path.getsize(path) if os.path.exists(path) else 0
 
 
-def _state_partitions(spark: SparkSession, row_paced_fold: bool = False) -> int:
-    """Streaming state-partition count derived from the recorded source
-    bytes (see ``_STATE_PARTITION_BYTES_CONF``;
-    ``_ROW_FOLD_PARTITION_BYTES_CONF`` when the operator declares its
-    fold row-paced). Falls back to the session's default parallelism
-    when no source was recorded."""
-    pending, _PENDING_SOURCE_BYTES[:] = list(_PENDING_SOURCE_BYTES), []
-    par = spark.sparkContext.defaultParallelism
-    if not pending or max(pending) <= 0:
+def _state_partitions(stream: DataFrame, row_paced_fold: bool = False) -> int:
+    """Streaming state-partition count derived from the bytes staged
+    under ``stream``'s file sources (see ``STATE_PARTITION_BYTES``;
+    ``ROW_FOLD_PARTITION_BYTES`` when the operator declares its fold
+    row-paced). Falls back to the session's default parallelism when
+    no source has a path (e.g. a Python data source)."""
+    par = stream.sparkSession.sparkContext.defaultParallelism
+    staged = max(map(_staged_bytes, _source_paths(stream)), default=0)
+    if staged <= 0:
         return par
-    conf_key, default = (
-        (_ROW_FOLD_PARTITION_BYTES_CONF, _ROW_FOLD_PARTITION_BYTES_DEFAULT)
-        if row_paced_fold
-        else (_STATE_PARTITION_BYTES_CONF, _STATE_PARTITION_BYTES_DEFAULT)
-    )
-    try:
-        target = int(spark.conf.get(conf_key))
-    except Exception:
-        target = default
-    if target <= 0:
-        target = default
-    n = (max(pending) + target - 1) // target
-    return max(1, min(n, par))
+    target = ROW_FOLD_PARTITION_BYTES if row_paced_fold else STATE_PARTITION_BYTES
+    return max(1, min((staged + target - 1) // target, par))
 
 
 def _stream_dir(sf_dir: str, name: str) -> str:
@@ -149,9 +135,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, TimestampType
 
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = _stream_dir(sf_dir, "events")
-    _note_source_bytes(src)
-    raw = spark.readStream.schema(batch_schema).parquet(src)
+    raw = spark.readStream.schema(batch_schema).parquet(_stream_dir(sf_dir, "events"))
     ts_type = batch_schema["ts"].dataType
     if isinstance(ts_type, LongType):
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -160,50 +144,51 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def events_stream_chunked(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame:
-    """``events`` replayed as ``n_chunks`` REAL incremental micro-batches:
-    the table is staged once into n parquet chunk files (event_id mod n,
-    ts pinned to UTC-wall NTZ) and streamed with maxFilesPerTrigger=1.
-
-    Downstream folds must be order-independent (e.g. last-writer-wins by
-    (ts, event_id)) — the file source picks files by modification time,
-    which we set ascending, but correctness should not depend on it."""
-    pin_runtime_conf(spark)
-    key = hashlib.md5(f"{sf_dir}/events/chunks{n_chunks}".encode()).hexdigest()[:12]
+def _replay_chunks(
+    spark: SparkSession, cache_key: str, n_chunks: int, chunk: Callable[[int], DataFrame]
+) -> DataFrame:
+    """Stage ``chunk(0..n_chunks-1)`` once as one parquet file each
+    (mtimes ascending, so "arrival order" follows the chunk index) and
+    stream them back with maxFilesPerTrigger=1 — n REAL incremental
+    micro-batches. Each chunk is staged by a Spark write: no
+    driver-side materialization, so the stager scales with the data.
+    Downstream folds must be order-independent — the file source picks
+    files by modification time, but correctness must not depend on it."""
+    key = hashlib.md5(f"{cache_key}/chunks{n_chunks}".encode()).hexdigest()[:12]
     d = f"/tmp/mapr_plugins_stream/{key}"
     staged = f"{d}/_STAGED"
     if not os.path.exists(staged):
         os.makedirs(d, exist_ok=True)
-        import glob as _glob
-        import shutil
-
-        from mapr_plugins_spark.catalog import table
-
-        # catalog.table yields ts as TIMESTAMP_NTZ (naive wall time),
-        # which Spark writes back as parquet timestamp[us]. Each chunk
-        # is staged by a Spark write — no driver-side toPandas
-        # materialization, so the stager itself scales with the table.
-        ev = table(spark, sf_dir, "events")
         for i in range(n_chunks):
             tmp = f"{d}/_tmp{i}"
-            (
-                ev.filter(F.col("event_id") % n_chunks == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            part = _glob.glob(f"{tmp}/part-*.parquet")[0]
+            chunk(i).coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = glob.glob(f"{tmp}/part-*.parquet")[0]
             os.replace(part, f"{d}/chunk{i}.parquet")
             shutil.rmtree(tmp)
             os.utime(f"{d}/chunk{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
         with open(staged, "w") as f:
             f.write("ok")
-    _note_source_bytes(d)
     schema = spark.read.parquet(f"{d}/chunk0.parquet").schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(d)
+    )
+
+
+def events_stream_chunked(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame:
+    """``events`` replayed as ``n_chunks`` REAL incremental micro-batches
+    (chunk i = event_id mod n). ``catalog.table`` yields ts as
+    TIMESTAMP_NTZ (naive wall time), which Spark writes back as parquet
+    timestamp[us], so the replayed ts is the UTC-wall NTZ column."""
+    from mapr_plugins_spark.catalog import table
+
+    pin_runtime_conf(spark)
+    return _replay_chunks(
+        spark,
+        f"{sf_dir}/events",
+        n_chunks,
+        lambda i: table(spark, sf_dir, "events").filter(F.col("event_id") % n_chunks == i),
     )
 
 
@@ -211,63 +196,33 @@ def df_stream_chunked(
     df: DataFrame, cache_key: str, order_col: str, n_chunks: int = 4
 ) -> DataFrame:
     """Replay an arbitrary DataFrame as ``n_chunks`` REAL incremental
-    micro-batches: staged once into contiguous chunks along
-    ``order_col`` (wave i = the i-th ntile — "arrival order" follows
-    the key), mtimes ascending, streamed with maxFilesPerTrigger=1.
-    Same contract as :func:`events_stream_chunked`: downstream folds
-    must be order-independent; the staging global sort is test-harness
-    scoped."""
-    import glob as _glob
-    import shutil
-
+    micro-batches: contiguous chunks along ``order_col`` (wave i = the
+    i-th ntile — "arrival order" follows the key). The staging global
+    sort is test-harness scoped."""
     from pyspark.sql import Window
 
     spark = df.sparkSession
     pin_runtime_conf(spark)
-    key = hashlib.md5(f"{cache_key}/chunks{n_chunks}".encode()).hexdigest()[:12]
-    d = f"/tmp/mapr_plugins_stream/{key}"
-    staged = f"{d}/_STAGED"
-    if not os.path.exists(staged):
-        os.makedirs(d, exist_ok=True)
-        chunked = df.withColumn(
-            "__chunk", F.ntile(n_chunks).over(Window.orderBy(order_col))
-        )
-        for i in range(n_chunks):
-            tmp = f"{d}/_tmp{i}"
-            (
-                chunked.filter(F.col("__chunk") == i + 1)
-                .drop("__chunk")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            part = _glob.glob(f"{tmp}/part-*.parquet")[0]
-            os.replace(part, f"{d}/chunk{i}.parquet")
-            shutil.rmtree(tmp)
-            os.utime(f"{d}/chunk{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
-        with open(staged, "w") as f:
-            f.write("ok")
-    _note_source_bytes(d)
-    schema = spark.read.parquet(f"{d}/chunk0.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
+    chunked = df.withColumn("__chunk", F.ntile(n_chunks).over(Window.orderBy(order_col)))
+    return _replay_chunks(
+        spark,
+        cache_key,
+        n_chunks,
+        lambda i: chunked.filter(F.col("__chunk") == i + 1).drop("__chunk"),
     )
 
 
 @contextmanager
-def pinned_state_partitions(spark: SparkSession, row_paced_fold: bool = False):
-    """Pin ``spark.sql.shuffle.partitions`` to the source-derived
-    streaming state-partition count for the duration of a streaming
-    run; restore the caller's value after. Drains the pending
-    source-bytes queue — every stream runner (``run_available_now``
-    and the foreachBatch-shaped registry keys) must run inside this,
-    both for the §2.2 sizing and so a constructed-but-differently-run
-    stream cannot leak its staged bytes into an unrelated later run."""
+def pinned_state_partitions(stream: DataFrame, row_paced_fold: bool = False):
+    """Pin ``spark.sql.shuffle.partitions`` to the state-partition count
+    derived from ``stream``'s own staged input for the duration of its
+    run; restore the caller's value after. Every stream runner
+    (``run_available_now`` and the foreachBatch-shaped registry keys)
+    runs inside this."""
+    spark = stream.sparkSession
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    spark.conf.set(key, str(_state_partitions(spark, row_paced_fold)))
+    spark.conf.set(key, str(_state_partitions(stream, row_paced_fold)))
     try:
         yield
     finally:
@@ -286,13 +241,13 @@ def run_available_now(
     shuffle partition; on a host session left at the 200 default that is
     ~200 state-store instances per stateful op for test-sized data. Pin
     the partition count to one derived from the staged source bytes
-    (see ``_STATE_PARTITION_BYTES_CONF``), restore after — results are
+    (see ``STATE_PARTITION_BYTES``), restore after — results are
     partitioning-independent, only the state layout changes.
     ``row_paced_fold=True`` declares the query's stateful fold
-    entity-keyed and row-paced (see ``_ROW_FOLD_PARTITION_BYTES_CONF``).
+    entity-keyed and row-paced (see ``ROW_FOLD_PARTITION_BYTES``).
     """
     spark = stream_df.sparkSession
-    with pinned_state_partitions(spark, row_paced_fold):
+    with pinned_state_partitions(stream_df, row_paced_fold):
         name = f"snap_{uuid.uuid4().hex[:12]}"
         q = (
             stream_df.writeStream.format("memory")

@@ -77,6 +77,36 @@ def test_priority_window_contract():
     assert not missing, f"window keys without oracle: {missing}"
 
 
+def test_registration_contract():
+    """A key is registered by being defined in a family module. Every
+    oracle must belong to a registered key, and the keys without one
+    are exactly the documented rows-only set — so a helper whose name
+    happens to match the naming rule cannot become a key unnoticed."""
+    import __spark_entry__ as E
+
+    qs, os_ = E.queries(), E.oracle_sql()
+    assert set(os_) <= set(qs), sorted(set(os_) - set(qs))
+    assert set(qs) - set(os_) == {"x_ann_ivf_batch", "x_ann_ivf_batch_prod", "x_sketch_hll"}
+
+
+def test_registration_rejects_a_key_defined_twice():
+    """Two family modules defining the same key must fail loudly, not
+    let one silently shadow the other."""
+    import types
+
+    import pytest
+
+    import __spark_entry__ as E
+
+    fams = []
+    for name in ("fam_a", "fam_b"):
+        mod = types.ModuleType(name)
+        exec("def x_twice(spark, sf_dir):\n    return None", mod.__dict__)
+        fams.append(E._family_queries(mod))
+    assert all(list(f) == ["x_twice"] for f in fams)
+    with pytest.raises(KeyError, match="x_twice"):
+        E._merge_disjoint(fams, "query")
+
 @given(rows=_rows)
 @settings(**_SETTINGS)
 def test_json_round_trip_law(spark, rows):

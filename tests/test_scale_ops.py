@@ -243,12 +243,9 @@ def test_blocking_recall_oracle_parity_where_cap_binds(spark):
     where the 500-doc cap is active on both engines."""
     from tests.oracle_harness import canonicalize, run_duckdb, spark_rows
 
-    from mapr_plugins_spark.operators.registry import (
-        extension_oracles,
-        x_blocking_recall,
-    )
+    from mapr_plugins_spark.operators.reg_dedup import oracles, x_blocking_recall
 
     sf = "/root/testdata/sf0.1"
     got = canonicalize(spark_rows(x_blocking_recall(spark, sf)))
-    want = canonicalize(run_duckdb(extension_oracles()["x_blocking_recall"], sf))
+    want = canonicalize(run_duckdb(oracles()["x_blocking_recall"], sf))
     assert got == want

@@ -7,17 +7,21 @@ batch-computed DuckDB equivalents.
 
 from __future__ import annotations
 
+import hashlib
+import shutil
+
 import pytest
 
 from mapr_plugins_spark.streaming import registry as SR
 
 
-@pytest.mark.parametrize("key", sorted(SR.streaming_oracles()))
+@pytest.mark.parametrize("key", sorted(SR.oracles()))
 def test_streaming_matches_batch_oracle(spark, sf_dir, key):
+    import __spark_entry__ as E
     from tests.oracle_harness import assert_matches_oracle
 
-    df = SR.streaming_queries()[key](spark, sf_dir)
-    assert_matches_oracle(df, SR.streaming_oracles()[key], sf_dir, key=key)
+    df = E.queries()[key](spark, sf_dir)
+    assert_matches_oracle(df, SR.oracles()[key], sf_dir, key=key)
 
 
 def test_stream_admission_rejects_duplicate_wave(spark, sf_dir):
@@ -349,7 +353,7 @@ def test_stream_heavy_hitters_equals_batch(spark, sf_dir):
     """The streaming GroupState count fold must land on exactly the
     batch heavy-hitter set and counts (additive state ⇒ replay- and
     chunking-independent)."""
-    from mapr_plugins_spark.operators.registry import x_heavy_hitters
+    from mapr_plugins_spark.operators.reg_sketch_graph import x_heavy_hitters
     from mapr_plugins_spark.streaming.registry import s14_stream_heavy_hitters
 
     stream = {
@@ -362,7 +366,7 @@ def test_stream_heavy_hitters_equals_batch(spark, sf_dir):
 def test_stream_drift_equals_batch(spark, sf_dir):
     """The streaming histogram fold must finish at exactly the batch
     drift report (commutative addition ⇒ chunking-independent)."""
-    from mapr_plugins_spark.operators.registry import x_drift_chi2
+    from mapr_plugins_spark.operators.reg_analytics import x_drift_chi2
     from mapr_plugins_spark.streaming.registry import s15_stream_drift
 
     stream = {tuple(r) for r in s15_stream_drift(spark, sf_dir).collect()}
@@ -378,7 +382,7 @@ def test_stream_heavy_hitters_bounded_state_and_exact(spark, sf_dir):
     recount), bit-identical to the batch op."""
     from pyspark.sql import functions as F
 
-    from mapr_plugins_spark.operators.registry import x_heavy_hitters
+    from mapr_plugins_spark.operators.reg_sketch_graph import x_heavy_hitters
     from mapr_plugins_spark.streaming.registry import (
         _stream_mg_candidates,
         s17_stream_heavy_hitters_bounded,
@@ -500,7 +504,7 @@ def test_stream_markov_crosses_batch_boundaries(spark, sf_dir):
     boundaries — equality with the batch lead() matrix proves the
     carried last-state works (a stateless per-batch lead would lose
     one pair per key per boundary)."""
-    from mapr_plugins_spark.operators.registry import x_markov_transitions
+    from mapr_plugins_spark.operators.reg_analytics import x_markov_transitions
     from mapr_plugins_spark.streaming.registry import s23_stream_markov
 
     batch = {(r.from_state, r.to_state): (r.n_pair, r.n_from, r.p_micro)
@@ -513,7 +517,7 @@ def test_stream_markov_crosses_batch_boundaries(spark, sf_dir):
 def test_stream_psi_equals_batch(spark, sf_dir):
     """The streaming PSI report equals the batch operator row for row
     — commutative histogram fold + the shared psi_from_cells finish."""
-    from mapr_plugins_spark.operators.registry import x_psi_drift
+    from mapr_plugins_spark.operators.reg_analytics import x_psi_drift
     from mapr_plugins_spark.streaming.registry import s24_stream_psi
 
     batch = {r.bin: (r.rb, r.cb, r.term_micro, r.psi_micro)
@@ -523,75 +527,100 @@ def test_stream_psi_equals_batch(spark, sf_dir):
     assert batch == stream
 
 
-def test_state_partitions_derive_from_source_bytes(spark):
+def _file_stream(spark, tmp_path, name: str, size: int):
+    """A file stream over a directory holding one ``size``-byte (sparse)
+    file. The schema is given, so the file is never read."""
+    d = tmp_path / name
+    d.mkdir()
+    with open(d / "part-0.parquet", "wb") as f:
+        f.truncate(size)
+    return spark.readStream.schema("x BIGINT").parquet(str(d))
+
+
+def test_state_partitions_derive_from_source_bytes(spark, tmp_path):
     """The replay harness sizes streaming state partitions from the
-    staged source bytes (guide §2.2: partitions sized to data, not to
-    the core count): ceil(bytes/advisory) clamped to [1, parallelism],
-    conf-overridable, queue drained per run, parallelism fallback when
-    no source was recorded."""
+    bytes staged under the stream's own file sources (guide §2.2:
+    partitions sized to data, not to the core count):
+    ceil(bytes/advisory) clamped to [1, parallelism], parallelism
+    fallback when no source has a path."""
     from mapr_plugins_spark.streaming import replay as R
 
     par = spark.sparkContext.defaultParallelism
-    # no recorded source → fall back to session parallelism
-    R._PENDING_SOURCE_BYTES.clear()
-    assert R._state_partitions(spark) == par
+    # no file source (a path-less stream) → fall back to session parallelism
+    assert R._state_partitions(spark.readStream.format("rate").load()) == par
 
-    # 2 MB at the 512 KiB default advisory → 4 partitions, queue drained
-    R._PENDING_SOURCE_BYTES.append(2 * 1024 * 1024)
-    assert R._state_partitions(spark) == min(4, par)
-    assert R._PENDING_SOURCE_BYTES == []
+    # 2 MB at the 512 KiB advisory → 4 partitions
+    assert R._state_partitions(_file_stream(spark, tmp_path, "two_mb", 2 * 1024 * 1024)) == min(
+        4, par
+    )
 
-    # several sources recorded → sized by the largest
-    R._PENDING_SOURCE_BYTES.extend([1, 512 * 1024 + 1])
-    assert R._state_partitions(spark) == min(2, par)
+    # several sources (a union) → sized by the largest
+    small = _file_stream(spark, tmp_path, "one_byte", 1)
+    big = _file_stream(spark, tmp_path, "half_mb_plus", 512 * 1024 + 1)
+    assert R._state_partitions(small.unionByName(big)) == min(2, par)
 
     # clamped above by parallelism
-    R._PENDING_SOURCE_BYTES.append(10**12)
-    assert R._state_partitions(spark) == par
-
-    # conf override wins (and is restored)
-    old = spark.conf.get(R._STATE_PARTITION_BYTES_CONF, None)
-    try:
-        spark.conf.set(R._STATE_PARTITION_BYTES_CONF, str(1024 * 1024))
-        R._PENDING_SOURCE_BYTES.append(2 * 1024 * 1024)
-        assert R._state_partitions(spark) == min(2, par)
-    finally:
-        if old is None:
-            spark.conf.unset(R._STATE_PARTITION_BYTES_CONF)
-        else:
-            spark.conf.set(R._STATE_PARTITION_BYTES_CONF, old)
+    assert R._state_partitions(_file_stream(spark, tmp_path, "one_gb", 2**30)) == par
 
 
-def test_row_paced_fold_partition_advisory(spark):
+def test_row_paced_fold_partition_advisory(spark, tmp_path):
     """Entity-keyed row-paced GroupState folds (s22/s23) declare
     ``row_paced_fold=True`` and get the denser 64 KiB advisory — their
     binding resource is Python fold CPU across partitions, not
     state-store instances (round-14 interleaved A/B: s22 12.0→8.0 s,
     s23 11.3→7.1 s at sf0.1, while bounded-key sketch folds regress at
-    that density). Same clamp and conf-override contract as the
-    default advisory."""
+    that density). Same clamp as the default advisory."""
     from mapr_plugins_spark.streaming import replay as R
 
     par = spark.sparkContext.defaultParallelism
+    stream = _file_stream(spark, tmp_path, "quarter_mb", 256 * 1024)
     # row-paced folds: 256 KiB at the 64 KiB advisory → 4 partitions
-    R._PENDING_SOURCE_BYTES.clear()
-    R._PENDING_SOURCE_BYTES.append(256 * 1024)
-    assert R._state_partitions(spark, row_paced_fold=True) == min(4, par)
-    assert R._PENDING_SOURCE_BYTES == []
+    assert R._state_partitions(stream, row_paced_fold=True) == min(4, par)
     # bounded-key folds (the default) keep the 512 KiB density
-    R._PENDING_SOURCE_BYTES.append(256 * 1024)
-    assert R._state_partitions(spark) == 1
-    # conf override wins for the row-paced advisory too
-    old = spark.conf.get(R._ROW_FOLD_PARTITION_BYTES_CONF, None)
+    assert R._state_partitions(stream) == 1
+
+
+def test_unrun_stream_does_not_size_the_next_run(spark, tmp_path):
+    """A stream that is staged and never run must not change the
+    state-partition count of the next run: each run is sized from its
+    own sources only."""
+    from mapr_plugins_spark.streaming import replay as R
+
+    par = spark.sparkContext.defaultParallelism
+    assert par > 1
+    abandoned = R.df_stream_chunked(spark.range(64), f"{tmp_path}/abandoned", "id")
     try:
-        spark.conf.set(R._ROW_FOLD_PARTITION_BYTES_CONF, str(128 * 1024))
-        R._PENDING_SOURCE_BYTES.append(256 * 1024)
-        assert R._state_partitions(spark, row_paced_fold=True) == min(2, par)
+        with R.pinned_state_partitions(spark.readStream.format("rate").load()):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == str(par)
     finally:
-        if old is None:
-            spark.conf.unset(R._ROW_FOLD_PARTITION_BYTES_CONF)
-        else:
-            spark.conf.set(R._ROW_FOLD_PARTITION_BYTES_CONF, old)
+        shutil.rmtree(R._source_paths(abandoned)[0])
+
+
+@pytest.mark.parametrize(
+    "bad", [None, float("nan"), float("-inf")], ids=["null", "nan", "neg_inf"]
+)
+def test_zscore_stream_refuses_non_finite_value(spark, sf_dir, tmp_path, bad):
+    """s22 folds exact integer micro-units in Python; a NULL ``value``
+    would silently widen that column to float64 there (and floor()
+    would zero NaN and clamp ±inf), so it fails by name in the JVM
+    projection before the fold."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapr_plugins_spark.streaming.registry import s22_stream_zscore
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet").slice(0, 8)
+    values = ev.column("value").to_pylist()
+    values[3] = bad
+    i = ev.schema.get_field_index("value")
+    ev = ev.set_column(i, "value", pa.array(values, ev.schema.field(i).type))
+    pq.write_table(ev, tmp_path / "events.parquet")
+    key = hashlib.md5(f"{tmp_path}/zscore_events/chunks4".encode()).hexdigest()[:12]
+    try:
+        with pytest.raises(Exception, match="events.value is NULL or not finite"):
+            s22_stream_zscore(spark, str(tmp_path)).collect()
+    finally:  # s22's staged replay of the tiny table
+        shutil.rmtree(f"/tmp/mapr_plugins_stream/{key}", ignore_errors=True)
 
 
 def test_run_available_now_restores_shuffle_partitions(spark, sf_dir):
