@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapr_plugins_spark.functions.deterministic import dsum
+from mapr_plugins_spark.session import sql_conf
 
 
 def gap_fill(
@@ -596,13 +597,8 @@ def incremental_agg_apply_pruned(
             ).cast("int")
         ),
     )
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
+    with sql_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         merged.write.mode("overwrite").partitionBy("__bucket").parquet(state_dir)
-    finally:
-        spark.conf.set(mode_key, old)
     return touched
 
 

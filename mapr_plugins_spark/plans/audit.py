@@ -18,6 +18,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from mapr_plugins_spark.session import sql_conf
+
 
 def plan_str(df: DataFrame, mode: str = "formatted") -> str:
     """The query plan as text (``df.explain`` output captured)."""
@@ -68,19 +70,14 @@ def codegen_span_count(build: Callable[[], DataFrame]) -> int:
     import pyspark.sql.functions as F  # noqa: F401  (builders often need it)
 
     probe = build()
-    spark = probe.sparkSession
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        # disable AQE AFTER the build: builders route through
-        # catalog.table → pin_runtime_conf, which (re)enables AQE, and
-        # an adaptive plan carries no finalized codegen ids. The
-        # executedPlan lazy val reads the conf at first access, so
-        # rebuilding under the disabled flag yields the static plan.
-        df = build()
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # disable AQE AFTER the build: builders route through
+    # catalog.table → pin_runtime_conf, which (re)enables AQE, and
+    # an adaptive plan carries no finalized codegen ids. The
+    # executedPlan lazy val reads the conf at first access, so
+    # rebuilding under the disabled flag yields the static plan.
+    df = build()
+    with sql_conf(probe.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
     return len(set(re.findall(r"\*\((\d+)\)", plan)))
 
 
@@ -88,21 +85,3 @@ def shuffle_count(df: DataFrame) -> int:
     """Number of Exchange nodes — every one is a full network pass over
     its input at scale; audits pin an upper bound per operator."""
     return count_nodes(df, "Exchange")
-
-
-@contextlib.contextmanager
-def sql_conf(spark, settings: dict[str, str]):
-    """Temporarily set runtime SQL confs, restoring prior values (or
-    unsetting ones that had no explicit value) on exit."""
-    old: dict[str, str | None] = {}
-    for k, v in settings.items():
-        old[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

@@ -16,6 +16,7 @@ higher initial partition count.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -92,6 +93,24 @@ def pin_runtime_conf(spark: SparkSession) -> None:
         )
     except Exception:
         pass
+
+
+@contextlib.contextmanager
+def sql_conf(spark: SparkSession, settings: dict[str, str]):
+    """Temporarily set runtime SQL confs, restoring prior values (or
+    unsetting ones that had no explicit value) on exit, error included."""
+    old: dict[str, str | None] = {}
+    for k, v in settings.items():
+        old[k] = spark.conf.get(k, None)
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def release_operator_caches(spark: SparkSession) -> None:

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapr_plugins_spark.catalog import table as _t
+from mapr_plugins_spark.session import sql_conf
 from mapr_plugins_spark.streaming.replay import (
     as_event_time,
     events_stream,
@@ -249,12 +250,8 @@ def s09_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with sql_conf(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
         result = ev.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=RunningStats(),
             outputStructType="user_id BIGINT, n_events BIGINT, min_val DOUBLE, max_val DOUBLE",
@@ -262,11 +259,6 @@ def s09_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
         out = run_available_now(result, "update")
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
     # update mode re-emits per batch: keep the final per-user state
     return out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),

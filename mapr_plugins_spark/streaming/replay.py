@@ -20,12 +20,11 @@ import os
 import shutil
 import uuid
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapr_plugins_spark.session import pin_runtime_conf
+from mapr_plugins_spark.session import pin_runtime_conf, sql_conf
 
 #: Advisory bytes of staged (compressed parquet) replay input per
 #: streaming state partition — the streaming twin of AQE's
@@ -212,21 +211,14 @@ def df_stream_chunked(
     )
 
 
-@contextmanager
 def pinned_state_partitions(stream: DataFrame, row_paced_fold: bool = False):
     """Pin ``spark.sql.shuffle.partitions`` to the state-partition count
     derived from ``stream``'s own staged input for the duration of its
     run; restore the caller's value after. Every stream runner
     (``run_available_now`` and the foreachBatch-shaped registry keys)
     runs inside this."""
-    spark = stream.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(_state_partitions(stream, row_paced_fold)))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    n = _state_partitions(stream, row_paced_fold)
+    return sql_conf(stream.sparkSession, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def run_available_now(

@@ -8,6 +8,8 @@ events parsed into a typed record and written as keyed JSON documents
 from __future__ import annotations
 
 import json
+import random
+import uuid
 
 import pytest
 
@@ -311,3 +313,128 @@ def test_sink_declared_schema_surface(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="missing from pipeline output"):
         run_batch(spark, spec_bad, str(d))
+
+
+OPEN_COST = "spark.sql.files.openCostInBytes"
+
+
+def _scan_tasks(spark, run) -> int:
+    """Tasks of the first stage ``run()`` launches — the payload scan
+    stage of a ``run_batch`` call."""
+    sc = spark.sparkContext
+    group = f"scan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "scan task count")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = [s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
+    return st.getStageInfo(min(stages)).numTasks
+
+
+def _purchase_lines(min_bytes: int) -> list[str]:
+    """csv purchase lines of at least ``min_bytes`` with their line
+    breaks: unique users, and item names of 1 to 600 characters, so
+    split boundaries land mid-line."""
+    rng = random.Random(7)
+    lines, size = [], 0
+    while size < min_bytes:
+        item = "i" * rng.randint(1, 600)
+        lines.append(f"user{len(lines)},{item},{rng.randint(0, 9)},{rng.randint(0, 999) / 100}")
+        size += len(lines[-1]) + 1
+    return lines
+
+
+def test_batch_scan_splits_across_cores(spark, tmp_path):
+    """A payload with at least PAYLOAD_SPLIT_MIN_BYTES per core scans in
+    one task per core, though it is far below Spark's 4 MiB open cost."""
+    from mapr_plugins_spark import pipeline as P
+
+    par = spark.sparkContext.defaultParallelism
+    d = tmp_path / "in"
+    d.mkdir()
+    lines = _purchase_lines(max(4, par) * P.PAYLOAD_SPLIT_MIN_BYTES)
+    (d / "events.txt").write_text("\n".join(lines) + "\n")
+    metrics = {}
+    tasks = _scan_tasks(spark, lambda: metrics.update(run_batch(spark, _spec(tmp_path), str(d))))
+    assert tasks == par
+    assert metrics == {"rows_in": len(lines), "rows_out": len(lines)}
+
+
+def test_tiny_batch_keeps_one_scan_task(spark, tmp_path):
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "events.txt").write_text(PAYLOADS)
+    assert _scan_tasks(spark, lambda: run_batch(spark, _spec(tmp_path), str(d))) == 1
+
+
+def test_large_payload_keeps_session_open_cost(spark, tmp_path):
+    """At open cost × parallelism bytes or more the scan plans exactly
+    as the session would; in between, the open cost is bytes per core."""
+    from mapr_plugins_spark.pipeline import _payload_open_cost
+    from mapr_plugins_spark.session import sql_conf
+
+    par = spark.sparkContext.defaultParallelism
+    session = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    path = tmp_path / "sparse.txt"
+    with open(path, "wb") as fh:  # sparse: no blocks on disk
+        fh.truncate(session * par)
+    assert _payload_open_cost(spark.read.text(str(path))) == session
+    with sql_conf(spark, {OPEN_COST: str(session // 4)}):
+        assert _payload_open_cost(spark.read.text(str(path))) == session // 4
+    with open(path, "wb") as fh:
+        fh.truncate(session * par // 2)
+    assert _payload_open_cost(spark.read.text(str(path))) == session // 2
+
+
+def test_run_batch_restores_session_conf(spark, tmp_path):
+    """The lowered open cost lives only for the write, error included."""
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "events.txt").write_text(PAYLOADS)
+    before = dict(spark.conf.getAll)
+    run_batch(spark, _spec(tmp_path), str(d))
+    assert dict(spark.conf.getAll) == before
+    bad = PipelineSpec.from_properties(
+        {"topics": "purchases", "format": "csv", "schema": PURCHASE_SCHEMA},
+        {"tableName": str(tmp_path / "bad"), "key": "user", "schema": "user STRING, item INT"},
+    )
+    with pytest.raises(Exception, match="cannot convert value of field 'item'"):
+        run_batch(spark, bad, str(d))
+    assert dict(spark.conf.getAll) == before
+
+
+def test_split_payload_writes_the_unsplit_documents(spark, tmp_path, monkeypatch):
+    """Line records survive split boundaries: two files of
+    variable-length CRLF lines without a final newline, scanned at least
+    4 ways, write the same ``(_id, doc)`` multiset as one split per file."""
+    from collections import Counter
+
+    from mapr_plugins_spark import pipeline as P
+
+    d = tmp_path / "in"
+    d.mkdir()
+    lines = _purchase_lines(6 * P.PAYLOAD_SPLIT_MIN_BYTES)
+    half = len(lines) // 2
+    (d / "a.txt").write_bytes("\r\n".join(lines[:half]).encode())
+    (d / "b.txt").write_bytes("\r\n".join(lines[half:]).encode())
+
+    def docs(name):
+        spec = PipelineSpec.from_properties(
+            {"topics": "purchases", "format": "csv", "schema": PURCHASE_SCHEMA},
+            {"tableName": str(tmp_path / name), "key": "user"},
+        )
+        metrics = {}
+        tasks = _scan_tasks(spark, lambda: metrics.update(run_batch(spark, spec, str(d))))
+        assert metrics == {"rows_in": len(lines), "rows_out": len(lines)}
+        rows = spark.read.parquet(str(tmp_path / name)).collect()
+        return tasks, Counter((r["_id"], r["doc"]) for r in rows)
+
+    split_tasks, split = docs("split")
+    monkeypatch.setattr(P, "PAYLOAD_SPLIT_MIN_BYTES", 2**62)  # the session's own open cost
+    whole_tasks, whole = docs("whole")
+    assert split_tasks >= 4
+    assert whole_tasks == 2  # one split per file
+    assert split == whole
+    assert len(whole) == len(lines)
